@@ -34,30 +34,8 @@ MENTIONS_SCHEMA = (
 )
 
 
-def candidate_prefilter(transcripts: DataFrame, struct) -> DataFrame:
-    """JVM-side candidate gate: keep only turns that can possibly
-    contain a mention — a token equal to some variant's FIRST token
-    (every match starts with one, by construction of the prefix set),
-    or a hashtag (segmentation can surface a name from any '#...').
-
-    MEASURED TRADE-OFF (sf0.1-derived bench, 300-entry gazetteer): the
-    literal-array arrays_overlap form costs O(tokens x first_tokens)
-    string compares per row — 5x SLOWER than just running the Python
-    matcher on everything. It pays only when the candidate rate is low
-    AND the filter is cheap, i.e. as a broadcast semi-join on exploded
-    tokens (hash probe per token, not a scan) — that is the form to use
-    on a real cluster with a big gazetteer. Left available but OFF by
-    default (see extract_mentions_df).
-    """
-    first_tokens = sorted({p for p in struct.prefixes if " " not in p})
-    toks = F.split(F.lower(F.col("text")), r"[^a-z0-9']+")
-    cond = F.arrays_overlap(toks, F.array(*[F.lit(t) for t in first_tokens]))
-    cond = cond | F.col("text").contains("#")
-    return transcripts.filter(cond)
-
-
 def extract_mentions_df(
-    transcripts: DataFrame, bc_struct, prefilter: bool = False, batch_gate: bool = False
+    transcripts: DataFrame, bc_struct, batch_gate: bool = False
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, ..., text) → mentions(conv_id,
     turn_idx, start, end, surface, norm); text[start:end] == surface.
@@ -72,12 +50,8 @@ def extract_mentions_df(
     alternation over ~300 first tokens costs about what the matcher's
     own cheap unigram gate costs on a mention-free row — and re's
     alternation degrades linearly with gazetteer size, so the gate is
-    OFF by default, same verdict as the JVM-side candidate_prefilter
-    above. It pays only if swapped for an Aho-Corasick scanner
+    OFF by default. It pays only if swapped for an Aho-Corasick scanner
     (pyahocorasick) on a cluster where that wheel is available."""
-    if prefilter:
-        transcripts = candidate_prefilter(transcripts, bc_struct.value)
-
     first_tokens = sorted({p for p in bc_struct.value.prefixes if " " not in p})
     gate_pattern = (
         "#|" + "|".join(re.escape(t) for t in first_tokens) if first_tokens else "#"

@@ -7,8 +7,9 @@ the scoring/canonicalization layer is the KG mandate on top (SURVEY.md
 
   L1  mentions ⋈ broadcast(variants) on norm     — broadcast hash join,
       zero shuffle (gazetteer ≪ transcripts, the defining asymmetry)
-  L2  row_number over (mention) ordered by the deterministic score
-      (match_type desc, cat_priority asc, geo_id asc)
+  L2  min_by aggregate per mention over the deterministic sort key
+      (match_type desc, cat_priority asc, geo_id asc) — map-side
+      partial aggregation, ~one shuffled row per mention
   L3  two-stage hash agg: votes per (norm, geo_id) → majority winner
       per norm (count desc, geo_id asc) — tiny shuffle (distinct
       surface forms, not turns)

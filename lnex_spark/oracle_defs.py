@@ -516,7 +516,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             # DECIMAL(18,4) money-sum idiom (engine-identical at every
-            # scale) — see q7_volume_shipping / verify-skill gotchas
+            # scale) — see the verify-skill gotchas
             F.round(F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")), 2)
             .cast("double")
             .alias("revenue"),

@@ -13,7 +13,7 @@ agreement and normalized dependence.
 
   * symmetric_uncertainty_events — symmetric uncertainty
     SU = 2·IG(X;Y)/(H(X)+H(Y)) between event type and user bucket:
-    the [0,1]-normalized form of infogain_type_user that makes
+    the [0,1]-normalized form of information gain that makes
     dependence comparable across feature pairs with different
     entropies — the feature-selection normalization step, one
     contingency aggregation.

@@ -8,9 +8,9 @@ and cumulative-hazard machinery.
     (+1 at start, −1 at end) boundary deltas, running-cumsum the
     concurrency, integrate concurrency × interval length over the
     observation window.  The two derivations agree exactly up to
-    float noise (same mergeable-identity discipline as
-    jackknife_identity_events); the sweep-line running sum is the
-    same bounded boundary-sized global window as the KS op.
+    float noise (mergeable-identity discipline); the sweep-line
+    running sum is the same bounded boundary-sized global window as
+    the KS op.
 
   * nelson_aalen_episodes — the Nelson-Aalen cumulative hazard
     H(t) = Σ_{t_i ≤ t} d_i/n_i over the same censored user×type

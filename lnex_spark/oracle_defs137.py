@@ -1,8 +1,8 @@
 """Hundred-thirty-seventh oracle-registry module: inequality of the
 customer revenue distribution — the Lorenz/Gini and Atkinson views
-that complete the concentration family (hhi_events is market-share
-concentration, pareto_parts is the 80/20 cut, theil_decomp_events is
-between/within decomposition; none emits the Gini itself):
+that complete the concentration family (pareto_parts is the 80/20
+cut, theil_decomp_events is between/within decomposition; none emits
+the Gini itself):
 
   * gini_lorenz_customers — Lorenz curve at decile resolution plus
     the Gini coefficient over per-customer revenue, using the exact

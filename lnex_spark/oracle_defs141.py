@@ -1,14 +1,13 @@
 """Hundred-forty-first oracle-registry module: ranking-quality and
 calibration decomposition over the shared documents scorer (the
-sigmoid-of-length confidence p and the lang='en' label y that
-calibration_bins_docs / ece_docs / auc_nchars_en_docs already use —
-same scored relation, new summaries):
+sigmoid-of-length confidence p and the lang='en' label y —
+one scored relation, several summaries):
 
   * average_precision_docs — average precision (the area under the
     precision-recall curve in its standard step form):
     AP = Σ_k P@k · rel_k / n_pos over the corpus ranked by score
     descending with a deterministic doc_id tiebreak.  Complements
-    auc_nchars_en_docs: ROC-AUC is prevalence-blind, AP is the
+    ROC-AUC, which is prevalence-blind, AP is the
     rare-positive metric a filtering pipeline actually tunes on.
     The rank is a global window over the *eval* relation — in
     production this runs on the labeled eval slice (bounded), never
@@ -16,7 +15,7 @@ same scored relation, new summaries):
     parallel.  Also emits precision@100 from the same ranking.
 
   * brier_decomposition_docs — Murphy's decomposition of the Brier
-    score over the same decile bins as calibration_bins_docs:
+    score over decile bins of the confidence:
     reliability Σ n_k(conf̄_k − acc_k)²/N (penalty, smaller better),
     resolution Σ n_k(acc_k − ȳ)²/N (reward, larger better),
     uncertainty ȳ(1−ȳ), plus the exact Brier and the within-bin

@@ -158,7 +158,7 @@ def lindley_backlog_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             # DECIMAL prefix sum: stored values sit on the 4-decimal
             # grid, so the decimal cumsum is exact and order-
             # independent — the distributed partial-sum order cannot
-            # shift a rounded cent (cf. the q7/q10 money idiom)
+            # shift a rounded cent (cf. tests/test_numeric_idioms.py)
             cumsum_of=F.col("c").cast("decimal(18,4)"),
             cumsum_col="_cumc",
         )

@@ -11,7 +11,7 @@ and reliability growth tracking.
     scale = exp(-intercept/shape), plus plot R^2 as the
     goodness-of-fit.  shape < 1 → bursty/infant-mortality failures,
     shape ≈ 1 → memoryless (cross-check: the exponential fit
-    underlying littles_law / erlang_c), shape > 1 → wear-out.
+    underlying Little's law and Erlang-C), shape > 1 → wear-out.
 
   * crow_amsaa_events — Crow-AMSAA (NHPP power-law) reliability
     growth: at the i-th error at cumulative time t_i (seconds since

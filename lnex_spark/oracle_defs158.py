@@ -10,7 +10,7 @@ causal identification and fully-sequential hypothesis testing.
     intercepts at the cutoff.  The quasi-experimental design for
     "does crossing the threshold change the outcome" when
     randomization is impossible — completes the causal suite next to
-    did_events / psm_events / iv_wald_events.  (Expected effect here
+    did_events / psm_events.  (Expected effect here
     ≈ 0: statuses are price-independent — the point is the
     estimator, and a ~0 readout doubles as a placebo check.)
 
@@ -21,8 +21,8 @@ causal identification and fully-sequential hypothesis testing.
     scan, boundaries ±ln(19) (alpha = beta = 0.05).  Reports the
     first boundary crossing (index, time-fraction of the stream,
     decision) and the final LLR — the always-valid early-stopping
-    monitor that fixed-horizon ab_test_events cannot provide; sibling
-    of hoeffding_seq_events with parametric (tighter) boundaries.
+    monitor that a fixed-horizon A/B test cannot provide, with
+    parametric (tighter) boundaries than Hoeffding's.
 """
 
 from __future__ import annotations

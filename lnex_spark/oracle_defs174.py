@@ -7,7 +7,7 @@ information flow and the modern rank test for unequal variances.
     TE(X→Y) = sum p(y_t, y_{t-1}, x_{t-1})
               ln [ p(y_t | y_{t-1}, x_{t-1}) / p(y_t | y_{t-1}) ],
     estimated from plain triple/pair/marginal counts.  The
-    nonlinear, directional complement of granger_events (which only
+    nonlinear, directional complement of Granger causality (which only
     sees linear mean dependence); asymmetry TE(X→Y) != TE(Y→X) is
     the leading-indicator readout.
 
@@ -17,7 +17,7 @@ information flow and the modern rank test for unequal variances.
     variances S_i^2 = var(Rc - Rw), W = n1 n2 (Rbar1c - Rbar2c) /
     (N sqrt(n1 S1^2 + n2 S2^2)), plus the stochastic-superiority
     estimate p_hat = P(X < Y) + 0.5 P(X = Y).  The
-    Behrens-Fisher-robust replacement for mann_whitney_events,
+    Behrens-Fisher-robust replacement for Mann-Whitney U,
     which assumes equal shape/variance under H0.
 """
 

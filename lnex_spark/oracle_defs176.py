@@ -2,9 +2,8 @@
 fitting and the classic inventory segmentation matrix.
 
   * bass_diffusion_events — Bass diffusion model fit on the hourly
-    cumulative-adopter curve (first-seen hour per user, as in
-    gompertz_growth_events): discrete Bass regression
-    n_t = a + b N_{t-1} + c N_{t-1}^2 solved by closed-form
+    cumulative-adopter curve (first-seen hour per user): discrete
+    Bass regression n_t = a + b N_{t-1} + c N_{t-1}^2 solved by closed-form
     two-predictor OLS (centered normal equations, 2x2 determinant),
     then m = (-b - sqrt(b^2 - 4ac)) / (2c), innovation p = a/m,
     imitation q = p + b — emitted only when the quadratic term is

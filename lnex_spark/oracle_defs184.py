@@ -1,6 +1,6 @@
 """Hundred-eighty-fourth oracle-registry module: loss-system sizing
-and data-freshness economics — the two queueing readouts erlang_c /
-littles_law still lacked.
+and data-freshness economics — two queueing readouts beyond Little's
+law and the Erlang-C delay model.
 
   * erlang_b_events — Erlang-B blocking probability for a LOSS
     system (no queue — excess work is dropped, the model for
@@ -9,8 +9,8 @@ littles_law still lacked.
     counts N = 5..15 via the series B = t_N / sum_{k<=N} t_k with
     t_k = A^k/k! computed as exp(cumsum ln(A/j)) — a window scan,
     no factorial overflow, no recursion.  Read the table where
-    blocking crosses 1%: that's the pool size; pairs with
-    erlang_c_events which sizes the WAITING variant.
+    blocking crosses 1%: that's the pool size; Erlang C
+    sizes the WAITING variant.
 
   * freshness_age_events — Age-of-Information of the purchase-event
     "feed": if a dashboard shows the latest purchase, its staleness

@@ -1,6 +1,6 @@
 """Hundred-eighty-fifth oracle-registry module: peaks-over-threshold
-extreme-value machinery — the tail model between hill_tail_docs
-(pure power law) and gumbel_maxima_events (block maxima).
+extreme-value machinery — the tail model between the Hill estimator
+(pure power law) and Gumbel block maxima.
 
   * gpd_tail_events — generalized Pareto fit to the value excesses
     over the 90th-percentile threshold (explicit rank pick), by

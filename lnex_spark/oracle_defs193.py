@@ -17,7 +17,7 @@ worst group.
     exp(eta * loss_s) normalized, for eta in {1, 5, 20}, with the
     weighted vs unweighted mean loss.  eta → 0 recovers uniform,
     eta → inf puts all mass on the worst source — the robust-
-    optimization dual of temperature_mixing_docs' frequency-based
+    optimization dual of temperature-scaled frequency-based
     weights.
 """
 

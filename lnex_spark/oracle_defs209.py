@@ -19,8 +19,8 @@ and revenue-management protection levels.
     of the empirical daily purchase-count distribution (explicit
     rank pick); booking limit for class 2 = capacity - y* at
     capacity = ceil(1.2 * mean daily demand).  Littlewood's rule on
-    real demand data — the yield-management sibling of
-    newsvendor_events.
+    real demand data — the yield-management sibling of the
+    newsvendor model.
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ naive rate division.
     observed / expected with Byar's approximate exact-Poisson 95%
     CI.  SIR != 1 AFTER hour standardization means the decile
     genuinely errs more, not that it is merely active at bad hours
-    — the adjustment kitagawa_events decomposes, applied per
+    — the adjustment a Kitagawa decomposition splits out, applied per
     entity.
 """
 

@@ -15,7 +15,7 @@ big buyers pay less?
     negative slope (bulk discounts), the mean slope, and the
     quantity-elasticity proxy at the mean.  A positive-slope brand
     in a discount-only catalog is a data bug with a price tag —
-    the economics cross-check on regr_price_qty's mechanical fit.
+    the economics cross-check on a mechanical price~quantity fit.
 """
 
 from __future__ import annotations

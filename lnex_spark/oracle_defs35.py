@@ -13,7 +13,7 @@ community quality, and lexical diversity.
     sidesteps the Spark↔DuckDB dow-numbering divergence documented
     at date_funcs_orders).  The seasonal-naive residual screen that
     catches "this Monday is unlike other Mondays" where a global
-    z-score (zscore_outliers_events) cannot.
+    z-score cannot.
   * modularity_events — Newman modularity Q of the verified LPA
     communities over the co-occurrence graph: community detection
     plus its quality measurement in one value-checked op (compose

@@ -14,7 +14,7 @@ bigram language-model scoring, and RFM segmentation.
     corpus-sized sorted table directly.
   * bigram_lm_score_docs — per-document cross-entropy under the
     corpus bigram LM with add-one smoothing: the n-gram upgrade of
-    lm_doc_score (unigram), the quality signal behind perplexity
+    unigram LM scoring, the quality signal behind perplexity
     filtering of training corpora.  Two count tables + one join per
     doc bigram; smoothing denominators are exact integers.
   * rfm_users — recency/frequency/monetary quintile segmentation:

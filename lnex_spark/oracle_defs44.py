@@ -2,8 +2,8 @@
 
   * intradoc_repeats — the most-repeated 3-gram WITHIN each document
     (docs whose top shingle occurs more than once): the repetition-
-    loop detector for model-generated text — doc_repetition_ratio
-    gives the corpus-level rate, this localizes WHICH n-gram loops
+    loop detector for model-generated text — a corpus-level
+    repetition rate says how often, this localizes WHICH n-gram loops
     per doc.  Non-distinct shingle counts per doc + a deterministic
     top-1 pick.
   * char_entropy_docs — character-level Shannon entropy per document

@@ -17,7 +17,7 @@ cumulative-gains curve.
     distinct-duration table, bounded by the day range, not by users.
 
   * gains_curve_docs — decile cumulative-gains / lift of the
-    deterministic logistic score from calibration_bins_docs against
+    deterministic sigmoid-of-length score against
     the lang='en' label: rank by score (doc_id tiebreak → ntile is
     engine-stable), per decile capture rate and lift.  The
     model-triage complement of the AUC and calibration ops.

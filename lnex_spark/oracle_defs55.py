@@ -20,7 +20,7 @@ decomposition, and weighted quantiles.
     fully-specified ordering: the first row whose running weight
     reaches half the total — integer weights, so the threshold
     comparison is exact.  Complements the unweighted exact picks
-    (percentile_disc_prices, scalable_median_price).
+    (scalable_median_price).
 """
 
 from __future__ import annotations

@@ -22,8 +22,8 @@ Good-Turing smoothing, and difference-in-differences.
     half-month periods, the 2×2 mean table and the DiD estimate
     (treatmentΔ − controlΔ) with its pooled standard error from
     per-cell variances.  The quasi-experimental readout when
-    randomization isn't available; pairs with ab_test (z),
-    welch_ttest (t) and cuped (variance reduction).
+    randomization isn't available, where a randomized test would use
+    a two-sample z or Welch t statistic.
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ clustering quality, and rank correlation.
 
   * f1_threshold_docs — precision/recall/F1 of the rule
     "lang='en' iff n_chars > t" over the same fixed 64-char
-    threshold grid as stump_threshold_docs, with an is_best argmax
+    threshold grid as a decision stump, with an is_best argmax
     flag on rounded F1.  Threshold selection is the deployment step
     after AUC says the score is usable; one pass builds the
     cumulative counts, the grid join is broadcast-sized.

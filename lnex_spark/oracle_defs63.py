@@ -5,7 +5,7 @@ regression, and propensity-score matching.
     covariance by THREE unrolled power-iteration rounds: covariance
     in raw-moment form as a (i, j, c) relation (no centering join),
     each round one matrix-vector join-aggregate (the same semiring
-    shape as matmul_embeddings) with the iterate re-normalized and
+    shape as a sparse matrix multiply) with the iterate re-normalized and
     ROUNDED to 6 per round — the same round-each-iteration
     determinism technique that made k-means unrollable.  Emits the
     Rayleigh-quotient eigenvalue estimate and the first components.
@@ -21,7 +21,7 @@ regression, and propensity-score matching.
   * psm_events — propensity-score matching: md5 user arms, score =
     pre-period mean value, each treated user matched to the nearest
     control score via the two-directional IGNORE-NULLS window pick
-    (the nearest_event_join machinery applied to the score axis,
+    (the nearest-event join machinery applied to the score axis,
     no quadratic treated×control join), ATT = mean post-period
     difference against the matched control.
 """

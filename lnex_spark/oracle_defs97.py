@@ -6,8 +6,8 @@ reachability and exact energy distance.
     chain: the recursion r_k(s) = P(s→target) + Σ_{t≠target}
     P(s,t)·r_{k-1}(t) unrolled twice over the 5×5 transition table
     (tiny joins — the matrix-vector product shape of
-    matmul/gnn_aggregate on the chain).  The MODEL-based funnel:
-    funnel_conversion_events counts what happened; this predicts
+    gnn_aggregate_events on the chain).  The MODEL-based funnel:
+    a conversion funnel counts what happened; this predicts
     reach from any state, the quantity a nudge/intervention
     simulation needs.
 

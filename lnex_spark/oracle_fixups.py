@@ -21,7 +21,7 @@ These are NOT result bugs — tools/driver_canon_check.py verified every
 entry below fails ONLY on dtype class / cell sortability, never on
 values — so the fix is a declarative projection applied at registration
 time (oracles.spark_queries / duckdb_sql) rather than edits scattered
-over 50 oracle_defs modules:
+over the oracle_defs modules:
 
   * ``dates``         both sides -> 'YYYY-MM-DD' strings
   * ``bigints``       DuckDB side -> CAST(col AS BIGINT) (Spark already int64)
@@ -44,20 +44,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FIXUPS: dict[str, dict[str, list[str]]] = {
-    "ab_test_events": {
-        "bigints": [
-            "ca",
-            "cb"
-        ]
-    },
     "active_span_users": {
         "bigints": [
             "active_us"
-        ]
-    },
-    "ams_f2_events": {
-        "bigints": [
-            "ams_estimate"
         ]
     },
     "array_funcs_stats": {
@@ -65,45 +54,9 @@ FIXUPS: dict[str, dict[str, list[str]]] = {
             "head_toks"
         ]
     },
-    "array_setops_docs": {
-        "arrays": [
-            "common"
-        ]
-    },
-    "arrow_brand_stats": {
-        "bigints": [
-            "price_cents"
-        ]
-    },
-    "assortativity_events": {
-        "bigints": [
-            "n_edges"
-        ]
-    },
-    "auc_nchars_en_docs": {
-        "bigints": [
-            "nn",
-            "np"
-        ]
-    },
     "bpe_merges_docs": {
         "bigints": [
             "freq"
-        ]
-    },
-    "changepoint_events": {
-        "dates": [
-            "split_day"
-        ]
-    },
-    "churn_stump_users": {
-        "bigints": [
-            "thr"
-        ]
-    },
-    "collation_ci_brands": {
-        "bigints": [
-            "price_cents"
         ]
     },
     "compat_extract_sets": {
@@ -116,40 +69,9 @@ FIXUPS: dict[str, dict[str, list[str]]] = {
             "text_chars"
         ]
     },
-    "cusum_events": {
-        "dates": [
-            "first_alarm_day"
-        ]
-    },
     "date_funcs_orders": {
         "dates": [
             "month_end"
-        ]
-    },
-    "decimal_money_agg": {
-        "doubles": [
-            "discounted",
-            "gross"
-        ]
-    },
-    "distinct_agg_orders": {
-        "bigints": [
-            "sum_buckets"
-        ]
-    },
-    "eb_shrinkage_users": {
-        "bigints": [
-            "clicks"
-        ]
-    },
-    "ece_docs": {
-        "bigints": [
-            "n_total"
-        ]
-    },
-    "esd_outliers_events": {
-        "dates": [
-            "day"
         ]
     },
     "f1_threshold_docs": {
@@ -157,38 +79,14 @@ FIXUPS: dict[str, dict[str, list[str]]] = {
             "tp"
         ]
     },
-    "fd_check_orders": {
-        "bigints": [
-            "n_violating"
-        ]
-    },
     "gains_curve_docs": {
         "bigints": [
             "n_pos"
         ]
     },
-    "hoeffding_seq_events": {
-        "bigints": [
-            "n_total"
-        ],
-        "dates": [
-            "d"
-        ]
-    },
     "horvitz_thompson_docs": {
         "bigints": [
             "true_chars"
-        ]
-    },
-    "influence_events": {
-        "dates": [
-            "day"
-        ]
-    },
-    "interval_arith_orders": {
-        "dates": [
-            "review_due",
-            "ship_by"
         ]
     },
     "join_card_estimate_events": {
@@ -200,11 +98,6 @@ FIXUPS: dict[str, dict[str, list[str]]] = {
         "bigints": [
             "at_risk",
             "deaths"
-        ]
-    },
-    "kernel_smoother_events": {
-        "dates": [
-            "day"
         ]
     },
     "key_skew_profile_events": {
@@ -222,42 +115,9 @@ FIXUPS: dict[str, dict[str, list[str]]] = {
             "centroid"
         ]
     },
-    "length_batches_docs": {
-        "bigints": [
-            "padding_waste",
-            "sum_len"
-        ]
-    },
-    "ltv_cohorts_events": {
-        "dates": [
-            "cohort"
-        ]
-    },
-    "mad_outliers_events": {
-        "bigints": [
-            "n_outliers"
-        ]
-    },
-    "mahalanobis_outliers_events": {
-        "dates": [
-            "day"
-        ]
-    },
     "markov_backtest_events": {
         "bigints": [
             "n_correct"
-        ]
-    },
-    "max_drawdown_events": {
-        "dates": [
-            "peak_day",
-            "recovery_day",
-            "trough_day"
-        ]
-    },
-    "merkle_day_hashes_events": {
-        "dates": [
-            "day"
         ]
     },
     "minhash_calibration_docs": {
@@ -265,52 +125,11 @@ FIXUPS: dict[str, dict[str, list[str]]] = {
             "n_agree"
         ]
     },
-    "new_users_curve_events": {
-        "dates": [
-            "d"
-        ]
-    },
-    "p_chart_events": {
-        "dates": [
-            "day"
-        ]
-    },
-    "peak_days_events": {
-        "dates": [
-            "day"
-        ]
-    },
-    "pipe_syntax_pricing": {
-        "bigints": [
-            "gross_cents",
-            "sum_qty"
-        ]
-    },
-    "prequential_markov_events": {
-        "dates": [
-            "day"
-        ]
-    },
     "psi_drift_events": {
         "bigints": [
             "bin",
             "n_a",
             "n_b"
-        ]
-    },
-    "quantize_embeddings": {
-        "arrays": [
-            "qvec"
-        ]
-    },
-    "retention_cohorts_events": {
-        "dates": [
-            "cohort"
-        ]
-    },
-    "rle_runs_events": {
-        "bigints": [
-            "run_idx"
         ]
     },
     "rolling_distinct_users": {
@@ -323,51 +142,14 @@ FIXUPS: dict[str, dict[str, list[str]]] = {
             "d"
         ]
     },
-    "sliding_window_rates": {
-        "bigints": [
-            "sum_v"
-        ]
-    },
-    "slo_burn_events": {
-        "bigints": [
-            "errs"
-        ]
-    },
-    "spectral_cut_events": {
-        "bigints": [
-            "hash_edge_cut",
-            "n_edges",
-            "spectral_edge_cut"
-        ]
-    },
-    "sql_udf_netprice": {
-        "bigints": [
-            "net_cents"
-        ]
-    },
     "streaks_users": {
         "bigints": [
             "n_active_days"
         ]
     },
-    "stump_threshold_docs": {
-        "bigints": [
-            "pos_left"
-        ]
-    },
     "table_checksum_orders": {
         "bigints": [
             "checksum"
-        ]
-    },
-    "topp_contexts_docs": {
-        "bigints": [
-            "n_continuations_obs"
-        ]
-    },
-    "tracking_signal_events": {
-        "dates": [
-            "day"
         ]
     },
     "variant_props_extract": {

@@ -125,7 +125,7 @@ def extract_link(
     if dedup_texts:
         mentions = extract_mentions_dedup_df(t, model.bc_struct)
     else:
-        mentions = extract_mentions_df(t, model.bc_struct, prefilter=False)
+        mentions = extract_mentions_df(t, model.bc_struct)
     linked = link_mentions(mentions, model.variants)
     winners = score_candidates(linked)
     if persist_winners:

@@ -113,8 +113,6 @@ def test_oracle_registry_batches5_6_complete():
     keys = {
         "split_assign_docs", "class_weights_embeddings", "pii_scrub_docs",
         "contamination_check", "quality_funnel_docs",
-        "merge_upsert_turns", "moving_avg_orders", "nth_value_orders",
-        "nullsafe_join_events", "seq_zip_parts",
     }
     assert keys <= set(spark_queries())
     assert keys <= set(duckdb_sql())  # all fully SQL-verified
@@ -131,37 +129,10 @@ def test_oracle_registry_batch7_complete():
     assert keys <= set(duckdb_sql())
 
 
-def test_oracle_registry_batch8_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {"recursive_cte_ancestors", "groupby_all_orders", "decimal_money_agg", "ilike_parts"}
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
 def test_oracle_registry_batch9_complete():
     from lnex_spark.oracles import duckdb_sql, spark_queries
 
     keys = {"kg_ambiguity_report", "geo_grid_cells"}
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch10_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {"filter_clause_orders", "percentile_disc_prices", "regr_price_qty"}
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch11_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {
-        "explode_outer_longtoks", "try_timestamp_events",
-        "scalar_funcs_lineitem", "union_byname_mixed",
-    }
     assert keys <= set(spark_queries())
     assert keys <= set(duckdb_sql())
 
@@ -178,8 +149,6 @@ def test_oracle_registry_batch13_complete():
     from lnex_spark.oracles import duckdb_sql, spark_queries
 
     keys = {
-        "zscore_outliers_events", "funnel_conversion_events",
-        "retention_cohorts_events", "ewma_values_events",
         "lpa_communities_events", "stratified_sample_docs",
         "label_centroids", "vector_norms",
     }
@@ -333,8 +302,7 @@ def test_driver_window_order_contract():
     assert len(_PRIORITY) == 50
     sql = E.oracle_sql()
     rows_only = {k for k in _PRIORITY if k not in sql}
-    # round-5 window: 100% never-driver-checked ops (VERDICT r04 item
-    # 1), every slot hash-checkable — no rows-only entries
+    # every fronted slot is hash-checkable — no rows-only entries
     assert rows_only == set()
 
 

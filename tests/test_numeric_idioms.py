@@ -1,9 +1,9 @@
 """Engine-identical numeric idioms for oracle pairs (round-3).
 
-Round 2's only hash-fail (merge_upsert_turns) and three latent
-divergences found by full-precision canonicalization (q7/q10/
-ratio_estimator) were all the same class: a derived double crossing a
-rounding boundary differently in Spark and DuckDB. Spark's round()
+Round 2's only hash-fail (a price upsert) and three latent
+divergences found by full-precision canonicalization (TPC-H Q7 and
+Q10 revenue, a ratio estimator) were all the same class: a derived
+double crossing a rounding boundary differently in Spark and DuckDB. Spark's round()
 HALF_UPs the shortest decimal repr of the double; DuckDB rounds the
 scaled binary value — at a half-cent boundary they disagree by a cent.
 
@@ -23,7 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 # prices whose *1.1 product sits exactly at a half-cent (e.g. 19.95 ->
-# 21.945) plus plain cases; these are the merge_upsert_turns shape
+# 21.945) plus plain cases; these are the price-upsert shape
 BOUNDARY_PRICES = [19.95, 0.05, 315754.29 / 1.1, 123.45, 999999.95, 0.25]
 
 

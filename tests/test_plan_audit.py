@@ -40,12 +40,13 @@ def test_plan_audit_has_zero_failures():
         timeout=900,
         cwd=str(ROOT),
     )
-    assert out.returncode == 0, out.stdout[-3000:] + out.stderr[-3000:]
     m = re.search(r"^(\d+) plan-check failures$", out.stdout, re.M)
-    assert m, "audit summary line missing:\n" + out.stdout[-3000:]
+    assert m, "audit summary line missing:\n" + out.stdout[-3000:] + out.stderr[-3000:]
     failed = [
         ln
         for ln in out.stdout.splitlines()
         if ln.endswith("MISSING") or ln.endswith("VIOLATED")
     ]
     assert m.group(1) == "0", "plan-shape regressions:\n" + "\n".join(failed)
+    # second signal: the audit's exit status agrees with its summary
+    assert out.returncode == 0, f"audit exited {out.returncode}:\n" + out.stderr[-3000:]

@@ -13,7 +13,8 @@ false-positives documented in BENCH.md:
   err_ranking_docs      cascade window over a rank<=20-filtered
                         frame the static plan walk cannot bound
 
-Planning 652 ops boots Spark and takes ~4-6 min, so it is env-gated:
+Planning the 284 registry ops boots Spark and takes ~4 min, so it is
+env-gated:
 
     WINDOW_AUDIT=1 python -m pytest tests/test_window_audit.py -q
 """
@@ -31,11 +32,16 @@ ROOT = Path(__file__).resolve().parent.parent
 
 pytestmark = pytest.mark.skipif(
     os.environ.get("WINDOW_AUDIT") != "1",
-    reason="plans all registry ops (~4-6 min); opt in with WINDOW_AUDIT=1",
+    reason="plans all registry ops (~4 min); opt in with WINDOW_AUDIT=1",
 )
 
 # classifier false-positives, dispositioned in BENCH.md round-4 audit
 KNOWN_FALSE_POSITIVES = {"energy_distance_docs", "err_ranking_docs"}
+
+# ops whose planning raised at sf0.001, measured with WINDOW_AUDIT=1;
+# any other op failing to plan is a regression, not noise
+FROZEN_PLANNING_ERRORS: frozenset[str] = frozenset()
+REGISTRY_SIZE = 284
 
 
 def _load_audit():
@@ -74,8 +80,6 @@ def test_no_new_raw_scale_global_windows(spark):
     )
     # the audit must actually have seen the registry (catch silent
     # registry-load failures masquerading as a clean audit)
-    assert len(E.queries()) > 600
-    # planning errors should stay rare (a handful of eager-collect ops
-    # can legitimately fail on edge-case tiny inputs; a spike means the
-    # audit silently skipped real plans)
-    assert len(errors) <= 5, errors
+    assert len(E.queries()) == REGISTRY_SIZE
+    # a plan that fails to build is a plan the audit silently skipped
+    assert errors.keys() <= FROZEN_PLANNING_ERRORS, errors

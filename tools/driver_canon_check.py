@@ -25,7 +25,7 @@ A PASS here is robust to ANY pandas-based hasher: identical dtypes +
 identical shortest-round-trip float reprs mean the values are
 bit-identical, leaving a driver's formatter no room to diverge at all.
 (Round 2 proved %.6g was too coarse: it truncated cents on 6+-digit
-money values, hiding the merge_upsert_turns half-cent divergence.)
+money values, hiding a price-upsert half-cent divergence.)
 
 Usage:
     python tools/driver_canon_check.py [sf_dir] [--jobs N] [only_op ...]
@@ -84,7 +84,7 @@ def _canon(v) -> str:
         # FULL precision (shortest round-trip repr), not %.6g: the judge
         # confirmed %.6g truncates cents on 6+-digit money values — which
         # is exactly where Spark/DuckDB double rounding diverges — and is
-        # why the r02 merge_upsert_turns hash-fail escaped a "0/649"
+        # why the r02 price-upsert hash-fail escaped a "0/649"
         # sweep.  repr() distinguishes doubles down to 1 ulp, so a PASS
         # here means bit-identical floats: no driver formatter can see a
         # difference this checker can't.

@@ -6,7 +6,7 @@ operators and grep them for the properties we require at scale:
   * built-in stages sit inside WholeStageCodegen spans
   * exactly the expected shuffles (Exchange) per pipeline
 
-Usage: python tools/explain_audit.py [op ...]
+Usage: python tools/explain_audit.py [op ...]   (exits 1 if any check fails)
 """
 
 from __future__ import annotations
@@ -297,6 +297,7 @@ def main() -> None:
         n_ex = plan.count("Exchange")
         print(f"  exchanges: {n_ex}")
     print(f"\n{bad} plan-check failures")
+    sys.exit(1 if bad else 0)
 
 
 if __name__ == "__main__":

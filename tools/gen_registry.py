@@ -1,10 +1,11 @@
 """Generate REGISTRY.md — the grep-able index of every queries() op:
-op name → defining module:line → oracle kind → driver-check history.
+op name → defining module:line → oracle kind.
 
-The 225 oracle_defs*.py modules register ops via side effect, which
-makes "where is op X?" a grep across 48k LoC; this table is the map
-(VERDICT r04 item 8).  Regenerated by tests/test_registry_doc.py so it
-can never drift from the code.
+The oracle_defs*.py modules register ops via side effect, which makes
+"where is op X?" a grep across the registry; this table is the map.
+tests/test_registry_doc.py checks it against the code, and the doc
+depends only on the source tree (not on CORRECTNESS_r*.json files), so
+it stays fresh until an op is added or moved.
 
 Usage:  python tools/gen_registry.py [--check]
   --check: exit 1 if REGISTRY.md is stale instead of rewriting it.
@@ -12,7 +13,6 @@ Usage:  python tools/gen_registry.py [--check]
 
 from __future__ import annotations
 
-import json
 import re
 import sys
 from pathlib import Path
@@ -36,24 +36,12 @@ def op_locations() -> dict[str, str]:
     return out
 
 
-def driver_history() -> dict[str, list[int]]:
-    """op name -> rounds in which the driver hash/rows-checked it."""
-    hist: dict[str, list[int]] = {}
-    for f in sorted(ROOT.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", f.name).group(1))
-        for name in json.loads(f.read_text()):
-            hist.setdefault(name, []).append(rnd)
-    return hist
-
-
 def build_markdown() -> str:
     from lnex_spark.oracles import _PRIORITY, duckdb_sql, spark_queries
 
     qs = spark_queries()
     sql = duckdb_sql()
     locs = op_locations()
-    hist = driver_history()
-    window = set(_PRIORITY[:50])
 
     # STABLE row order: the registry dict's tail order is
     # first-registration order, which shifts if some test imported an
@@ -73,18 +61,16 @@ def build_markdown() -> str:
         "# REGISTRY — operator index (generated by tools/gen_registry.py; do not edit)",
         "",
         f"{len(qs)} queries() ops; {len(sql)} carry a DuckDB value-hash oracle,",
-        f"{len(qs) - len(sql)} are rows-only by design.  'driver rounds' lists the",
-        "rounds whose CORRECTNESS_r*.json checked the op; 'r5w' marks membership",
-        "in the round-5 driver window (the first 50 queries() keys).",
+        f"{len(qs) - len(sql)} are rows-only by design.  The first {len(head)} rows",
+        "are the oracles._PRIORITY ops fronted at the head of queries(), whose",
+        "first 50 keys are the sampled correctness window.",
         "",
-        "| op | where | oracle | driver rounds | r5w |",
-        "|---|---|---|---|---|",
+        "| op | where | oracle |",
+        "|---|---|---|",
     ]
     for name in ordered_ops:
         kind = "sql-hash" if name in sql else "rows-only"
-        rounds = ",".join(f"r{r}" for r in hist.get(name, [])) or "—"
-        w = "●" if name in window else ""
-        lines.append(f"| {name} | {locs.get(name, '?')} | {kind} | {rounds} | {w} |")
+        lines.append(f"| {name} | {locs.get(name, '?')} | {kind} |")
     lines.append("")
     return "\n".join(lines)
 
